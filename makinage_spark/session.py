@@ -7,6 +7,15 @@ Python boundary, and shuffle-partition sizing. Tests run on ``local[N]`` but the
 defaults are chosen so the same code is sane on a 1000-executor cluster reading
 100 TB: nothing here pins data to the driver, and per-query knobs (broadcast
 thresholds, partition counts) stay overridable.
+
+Local sessions also start their Python workers from the engine's own daemon,
+``makinage_spark._pyworker`` (``spark.python.daemon.module``). PySpark's worker
+invalidates the import caches before every task, and on Python 3.11 that makes
+each zip importer re-read ``pyspark.zip``'s whole directory: a fixed cost on
+every Python task (pandas UDFs, ``applyInPandasWithState``, serving, codecs)
+before any user code runs. The daemon re-reads an archive only when it has
+changed. The package root is appended to the workers' ``PYTHONPATH`` so the
+daemon imports even when the driver found the package through ``sys.path``.
 """
 
 from __future__ import annotations
@@ -14,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Defaults applied by :func:`get_spark`. Chosen for cluster-scale sanity, not
 #: local convenience: AQE coalesces/splits shuffle partitions at runtime, so the
@@ -62,7 +73,8 @@ def get_spark(
     if master:
         builder = builder.master(master)
     confs = dict(DEFAULT_CONFS)
-    if master and master.startswith("local"):
+    local = bool(master) and master.startswith("local")
+    if local:
         # local mode: driver heap IS the cluster (all executor threads share
         # it), and Spark's 1g default starves 32 cores — GC pressure at
         # sf0.1, OOM at 5x. Sized from env (cluster submits set their own
@@ -71,11 +83,18 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
+        confs.setdefault("spark.python.daemon.module", "makinage_spark._pyworker")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_confs:
         confs.update(extra_confs)
+    if local:
+        # merged into, not replacing, a PYTHONPATH the caller passes
+        key = "spark.executorEnv.PYTHONPATH"
+        paths = [p for p in confs.get(key, "").split(os.pathsep) if p]
+        if _PACKAGE_ROOT not in paths:
+            confs[key] = os.pathsep.join(paths + [_PACKAGE_ROOT])
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

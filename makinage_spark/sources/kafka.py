@@ -26,6 +26,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType
 
 from makinage_spark.encodings import ENCODINGS
 
@@ -113,16 +114,15 @@ def encode_value(df: DataFrame, encoding: str = "string", key: str | None = None
     """Encode columns into the Kafka ``value`` (+ optional ``key``) wire
     columns (A2; key ≈ partition_selector, A14)."""
     enc, _ = ENCODINGS[encoding]
-    if encoding == "json":
-        out = enc()(df)
-    elif encoding == "string":
-        out = enc()(df)
-    else:
-        out = enc()(df)
     cols = [F.col("value")]
     if key:
-        cols.insert(0, F.col(key).cast("binary").alias("key"))
-    return out.select(*cols)
+        k = F.col(key)
+        # string and binary keys keep their exact bytes; anything else goes
+        # through its string form, since ANSI mode refuses e.g. bigint→binary
+        if not isinstance(df.schema[key].dataType, (StringType, BinaryType)):
+            k = k.cast("string")
+        cols.insert(0, k.cast("binary").alias("key"))
+    return enc()(df).select(*cols)
 
 
 def sink_options(server: str, topic: str, max_request_size: int | None = None) -> dict[str, str]:

@@ -48,32 +48,17 @@ def topic_path(broker_dir: str, topic: str) -> str:
 
 def _existing(spark: SparkSession, broker_dir: str, topic: str) -> DataFrame:
     path = topic_path(broker_dir, topic)
-    # existence-check BEFORE touching the reader (r8): a read of a missing
-    # path fails inside DataSource resolution, and that failed analysis is
-    # re-raised asynchronously by any lingering ExecutionListener (e.g. an
-    # Observation registered by a metrics tap whose plan was explained but
-    # never executed) — the race logged "ERROR ExecutionListenerBus …
-    # PATH_NOT_FOUND …/events_topic" during plan audits. An empty log is a
-    # normal state for a topic, not an exception to catch. os.path can only
-    # answer for local paths, so scheme-prefixed broker_dirs (hdfs://,
-    # s3a://, …) keep the reader-probe fallback — the race fix targets the
-    # local/emulator path, which is the only one this sandbox exercises.
-    # URI handling (r9, ADVICE): string-prefix stripping only understood the
-    # double-slash form 'file://…'; Spark's own normalization emits
-    # 'file:/path' (single slash), which contains no '://' and therefore fell
-    # into the local branch where os.path.isdir('file:/…') is always False —
-    # an existing topic silently read as empty and produce() restarted
-    # offsets at -1, appending duplicate offsets. Parse the URI instead: any
-    # file-scheme (or scheme-less) path with a local authority is answered by
-    # os.path; everything else keeps the reader-probe fallback.
-    # (r10, ADVICE) two residual holes in the r9 urlparse fix: a file: URI
-    # can carry percent-encoding (Hadoop normalization emits %20 for spaces
-    # in local paths), so the decoded path must be unquoted before os.path
-    # sees it; and a RAW scheme-less path containing '#' or '?' would be
-    # split into fragment/query by urlparse, truncating parsed.path and
-    # making an existing topic read as empty (the exact duplicate-offset
-    # corruption this branch exists to prevent). Raw paths therefore bypass
-    # urlparse entirely — only genuine file: URIs go through unquote.
+    # Check existence before touching the reader: a read of a missing path
+    # fails inside DataSource resolution, and any lingering
+    # ExecutionListener (e.g. an Observation whose plan was explained but
+    # never executed) re-raises that failed analysis asynchronously. An empty
+    # log is a normal state for a topic, not an exception to catch.
+    # os.path answers only for local paths: scheme-less paths and file: URIs
+    # ('file:/p' as Spark normalizes it, or 'file:///p') with a local
+    # authority. Everything else (hdfs://, s3a://, …) keeps the reader probe.
+    # A file: URI may be percent-encoded, so its path is unquoted; a raw path
+    # skips urlparse, which would cut it at a '#' or '?'. Reading an existing
+    # topic as empty would restart offsets at -1 and append duplicates.
     parsed = urlparse(path)
     if parsed.scheme in ("", "file") and parsed.netloc in ("", "localhost"):
         local = path if parsed.scheme == "" else unquote(parsed.path)

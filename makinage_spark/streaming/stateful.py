@@ -37,6 +37,13 @@ _AGGS = {
 }
 
 
+def _ordered(pdfs: Iterator[pd.DataFrame], by) -> pd.DataFrame:
+    """One key's whole micro-batch, sorted once. Arrow may split a key's rows
+    across chunks (``spark.sql.execution.arrow.maxRecordsPerBatch``), so
+    sorting chunk by chunk would fold out-of-order rows in the wrong order."""
+    return pd.concat(list(pdfs), ignore_index=True).sort_values(by)
+
+
 def streaming_roll(
     df,
     key_col: str,
@@ -66,22 +73,20 @@ def streaming_roll(
         else:
             buffer, seen, next_start = [], 0, 0
         rows = {"window_id": [], "agg_value": []}
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            for v in pdf[value_col]:
-                buffer.append(float(v))
-                seen += 1
-                # windows are [s, s+window) for s = k*stride; flush every
-                # window completed by this row
-                while next_start + window <= seen:
-                    lo = next_start - (seen - len(buffer))
-                    rows["window_id"].append(next_start // stride)
-                    rows["agg_value"].append(agg_fn(buffer[lo : lo + window]))
-                    next_start += stride
-                # trim: nothing before next_start is needed again
-                drop = next_start - (seen - len(buffer))
-                if drop > 0:
-                    buffer = buffer[drop:]
+        for v in _ordered(pdfs, order_col)[value_col]:
+            buffer.append(float(v))
+            seen += 1
+            # windows are [s, s+window) for s = k*stride; flush every
+            # window completed by this row
+            while next_start + window <= seen:
+                lo = next_start - (seen - len(buffer))
+                rows["window_id"].append(next_start // stride)
+                rows["agg_value"].append(agg_fn(buffer[lo : lo + window]))
+                next_start += stride
+            # trim: nothing before next_start is needed again
+            drop = next_start - (seen - len(buffer))
+            if drop > 0:
+                buffer = buffer[drop:]
         state.update((buffer, seen, next_start))
         if rows["window_id"]:
             out = pd.DataFrame(rows)
@@ -104,23 +109,17 @@ def streaming_scan(df, key_col: str, value_col: str, order_col: str):
 
     def _proc(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         total, n = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            vals = pdf[value_col].astype(float)
-            run = vals.cumsum() + total
-            idx = pd.RangeIndex(n + 1, n + len(vals) + 1)
-            total = float(run.iloc[-1]) if len(run) else total
-            n += len(vals)
-            out = pd.DataFrame(
-                {
-                    key_col: key[0],
-                    order_col: pdf[order_col].values,
-                    "running_total": run.values,
-                    "running_count": idx,
-                }
-            )
-            yield out
-        state.update((total, n))
+        pdf = _ordered(pdfs, order_col)
+        run = pdf[value_col].astype(float).cumsum() + total
+        state.update((float(run.iloc[-1]), n + len(run)))
+        yield pd.DataFrame(
+            {
+                key_col: key[0],
+                order_col: pdf[order_col].values,
+                "running_total": run.values,
+                "running_count": pd.RangeIndex(n + 1, n + len(run) + 1),
+            }
+        )
 
     return df.groupBy(key_col).applyInPandasWithState(
         _proc,
@@ -148,23 +147,19 @@ def streaming_pack(df, key_col: str, token_col: str, order_col: str, budget: int
 
     def _proc(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         (cum,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            toks = pdf[token_col].astype("int64")
-            ends = toks.cumsum() + cum
-            starts = ends - toks
-            out = pd.DataFrame(
-                {
-                    key_col: key[0],
-                    order_col: pdf[order_col].values,
-                    token_col: toks.values,
-                    "seq_id": (starts // budget).astype("int64").values,
-                }
-            )
-            if len(ends):
-                cum = int(ends.iloc[-1])
-            yield out
-        state.update((cum,))
+        pdf = _ordered(pdfs, order_col)
+        toks = pdf[token_col].astype("int64")
+        ends = toks.cumsum() + cum
+        starts = ends - toks
+        state.update((int(ends.iloc[-1]),))
+        yield pd.DataFrame(
+            {
+                key_col: key[0],
+                order_col: pdf[order_col].values,
+                token_col: toks.values,
+                "seq_id": (starts // budget).astype("int64").values,
+            }
+        )
 
     return df.groupBy(key_col).applyInPandasWithState(
         _proc,
@@ -212,18 +207,17 @@ def streaming_funnel(
         else:
             st, seq = [None] * n_stages, 0
         mins = [None if m is None or m < 0 else m for m in st]
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, order_col])
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, et in zip(ts_us, pdf[type_col]):
-                try:
-                    i = stages.index(et)
-                except ValueError:
-                    continue
-                if i > 0 and (mins[i - 1] is None or not (mins[i - 1] < t)):
-                    continue
-                if mins[i] is None or t < mins[i]:
-                    mins[i] = int(t)
+        pdf = _ordered(pdfs, [ts_col, order_col])
+        ts_us = pdf[ts_col].astype("int64") // 1000
+        for t, et in zip(ts_us, pdf[type_col]):
+            try:
+                i = stages.index(et)
+            except ValueError:
+                continue
+            if i > 0 and (mins[i - 1] is None or not (mins[i - 1] < t)):
+                continue
+            if mins[i] is None or t < mins[i]:
+                mins[i] = int(t)
         seq += 1
         state.update(([-1 if m is None else m for m in mins], seq))
         out = {key_col: [key[0]], "emit_seq": [seq]}
@@ -271,27 +265,25 @@ def streaming_debounce(df, key_col: str, ts_col: str, order_col: str, gap_second
             state.remove()
         else:
             held = state.get if state.exists else None
-            for pdf in pdfs:
-                pdf = pdf.sort_values([ts_col, order_col])
-                ts_us = pdf[ts_col].astype("int64") // 1000
-                for t, oid in zip(ts_us, pdf[order_col]):
-                    t, oid = int(t), int(oid)
-                    if held is not None and t > held[0] + gap_us:
-                        out["order"].append(int(held[1]))
-                        out["ts_us"].append(int(held[0]))
-                        out["reason"].append("follow")
-                        held = (t, oid)
-                    elif held is None or (t, oid) > held:
-                        # supersede only when the newcomer sorts strictly
-                        # after the held record on (ts, order) — an
-                        # equal-timestamp record arriving in a later
-                        # micro-batch with a smaller order id must not
-                        # replace it (batch oracle tie-break is (ts, id))
-                        held = (t, oid)
-                if held is not None:
-                    state.update((held[0], held[1]))
-                    # flush when the watermark passes the quiet period
-                    state.setTimeoutTimestamp(held[0] // 1000 + gap_seconds * 1000 + 1)
+            pdf = _ordered(pdfs, [ts_col, order_col])
+            ts_us = pdf[ts_col].astype("int64") // 1000
+            for t, oid in zip(ts_us, pdf[order_col]):
+                t, oid = int(t), int(oid)
+                if held is not None and t > held[0] + gap_us:
+                    out["order"].append(int(held[1]))
+                    out["ts_us"].append(int(held[0]))
+                    out["reason"].append("follow")
+                    held = (t, oid)
+                elif held is None or (t, oid) > held:
+                    # supersede only when the newcomer sorts strictly
+                    # after the held record on (ts, order) — an
+                    # equal-timestamp record arriving in a later
+                    # micro-batch with a smaller order id must not
+                    # replace it (batch oracle tie-break is (ts, id))
+                    held = (t, oid)
+            state.update((held[0], held[1]))
+            # flush when the watermark passes the quiet period
+            state.setTimeoutTimestamp(held[0] // 1000 + gap_seconds * 1000 + 1)
         if out["order"]:
             res = pd.DataFrame(out)
             res[key_col] = key[0]
@@ -323,21 +315,20 @@ def streaming_ewma(df, key_col: str, value_col: str, order_col: str, alpha: floa
             cur, seeded = state.get
         else:
             cur, seeded = 0.0, False
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            out = []
-            for v in pdf[value_col].astype(float):
-                cur = float(v) if not seeded else a * float(v) + (1.0 - a) * cur
-                seeded = True
-                out.append(cur)
-            yield pd.DataFrame(
-                {
-                    key_col: key[0],
-                    order_col: pdf[order_col].values,
-                    "ewma": out,
-                }
-            )
+        pdf = _ordered(pdfs, order_col)
+        out = []
+        for v in pdf[value_col].astype(float):
+            cur = float(v) if not seeded else a * float(v) + (1.0 - a) * cur
+            seeded = True
+            out.append(cur)
         state.update((cur, seeded))
+        yield pd.DataFrame(
+            {
+                key_col: key[0],
+                order_col: pdf[order_col].values,
+                "ewma": out,
+            }
+        )
 
     return df.groupBy(key_col).applyInPandasWithState(
         _proc,
@@ -370,22 +361,19 @@ def streaming_zip(df, key_col: str, side_col: str, order_col: str, value_col: st
             lo, lv, ro, rv, seq = [], [], [], [], 0
         out = {"pair_seq": [], "left_order": [], "left_value": [],
                "right_order": [], "right_value": []}
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            for side, o, v in zip(
-                pdf[side_col], pdf[order_col], pdf[value_col]
-            ):
-                if int(side) == 0:
-                    lo.append(int(o)), lv.append(float(v))
-                else:
-                    ro.append(int(o)), rv.append(float(v))
-                while lo and ro:
-                    out["pair_seq"].append(seq)
-                    out["left_order"].append(lo.pop(0))
-                    out["left_value"].append(lv.pop(0))
-                    out["right_order"].append(ro.pop(0))
-                    out["right_value"].append(rv.pop(0))
-                    seq += 1
+        pdf = _ordered(pdfs, order_col)
+        for side, o, v in zip(pdf[side_col], pdf[order_col], pdf[value_col]):
+            if int(side) == 0:
+                lo.append(int(o)), lv.append(float(v))
+            else:
+                ro.append(int(o)), rv.append(float(v))
+            while lo and ro:
+                out["pair_seq"].append(seq)
+                out["left_order"].append(lo.pop(0))
+                out["left_value"].append(lv.pop(0))
+                out["right_order"].append(ro.pop(0))
+                out["right_value"].append(rv.pop(0))
+                seq += 1
         state.update((lo, lv, ro, rv, seq))
         if out["pair_seq"]:
             res = pd.DataFrame(out)

@@ -234,6 +234,39 @@ def test_streaming_scan_state_survives_batches(spark):
     shutil.rmtree(d), shutil.rmtree(d + "_ck")
 
 
+def test_stateful_ops_sort_the_whole_micro_batch_across_arrow_chunks(spark):
+    """Six reversed rows of one key in one micro-batch, cut into Arrow chunks
+    of three: the fold must follow the order column over the key's whole
+    micro-batch, not chunk by chunk."""
+    d = tmpdir()
+    schema = "user long, seq long, value double"
+    stream = _stream_files(
+        spark, [[(1, s, float(s)) for s in range(6, 0, -1)]], schema, d
+    )
+    queries = {
+        "scan": streaming_scan(stream, "user", "value", "seq"),
+        "roll": streaming_roll(stream, "user", "value", "seq", window=3, stride=3),
+    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = {}
+        for op, out in queries.items():
+            name = f"{op}_{uuid.uuid4().hex[:6]}"
+            q = (out.writeStream.format("memory").queryName(name)
+                 .option("checkpointLocation", f"{d}_{op}_ck")
+                 .trigger(availableNow=True).start())
+            q.awaitTermination(120)
+            got[op] = sorted(tuple(r)[1:] for r in spark.sql(f"SELECT * FROM {name}").collect())
+    finally:
+        spark.conf.set(key, saved)
+        for p in (d, f"{d}_scan_ck", f"{d}_roll_ck"):
+            shutil.rmtree(p, ignore_errors=True)
+    assert got["scan"] == [(s, s * (s + 1) / 2, s) for s in range(1, 7)]
+    assert got["roll"] == [(0, 2.0), (1, 5.0)]
+
+
 def test_with_event_time_batch_passthrough(spark):
     df = spark.createDataFrame([(1, "2024-01-01 00:00:00")], "id long, t string")
     out = with_event_time(df, F.col("t"))

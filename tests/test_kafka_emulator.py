@@ -83,6 +83,22 @@ def test_key_routing_is_deterministic(spark, broker):
     assert all(r.n == 1 for r in nparts)
 
 
+def test_bigint_key_routes_each_key_to_one_partition(spark, broker):
+    """A numeric key column is encoded through its string form: Spark's ANSI
+    mode refuses a direct bigint → binary cast."""
+    df = spark.createDataFrame(
+        [(u, str(i)) for i, u in enumerate([7, 42, 7, 1001, 42, 7])],
+        "user_id bigint, value string",
+    )
+    emu.produce(spark, broker, "by_user", df, key="user_id", partitions=4)
+    raw = spark.read.parquet(emu.topic_path(broker, "by_user"))
+    parts = {}
+    for r in raw.select(F.col("key").cast("string").alias("k"), "partition").collect():
+        parts.setdefault(r.k, set()).add(r.partition)
+    assert sorted(parts) == ["1001", "42", "7"]
+    assert all(len(p) == 1 for p in parts.values())
+
+
 def test_graph_multiply_sample_batch_over_emulated_kafka(spark, broker):
     """The reference's full deployment golden through the emulated topic
     layer: produce "5" into the values topic, run the YAML graph (source →
